@@ -20,3 +20,7 @@ them is declarative DataFrame API so Catalyst handles pruning/pushdown.
 """
 
 __version__ = "0.1.0"
+
+from .shipping import install_stat_checked_zip_reads
+
+install_stat_checked_zip_reads()

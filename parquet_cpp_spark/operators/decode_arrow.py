@@ -154,7 +154,7 @@ def decode_parquet_direct(spark, chunks_path: str, slices_per_core: int = 2,
     or the JVM."""
     import os
 
-    from ..shipping import ensure_shipped
+    from ..shipping import ensure_shipped, map_descriptors
     ensure_shipped(spark)
 
     files = []
@@ -164,45 +164,43 @@ def decode_parquet_direct(spark, chunks_path: str, slices_per_core: int = 2,
     if not files:
         raise ValueError(f"no chunk files under {chunks_path}")
     cores = spark.sparkContext.defaultParallelism
+    # explicit slices, no shuffle stage (see sources.parquet_direct) —
+    # whole files per task either way. Deliberately NOT amortized like
+    # the encode descriptors: decode tasks stream the whole reconstructed
+    # table back through Arrow (seconds of IO-coupled work each), so
+    # straggler smoothing beats the per-task fixed cost — on the 32-core
+    # host 128 tasks ran consistently faster than 32 (6.7 vs 10.5, 5.3 vs
+    # 6.7, 4.8 vs 5.3 s across three interleaved trials). On the 4-core
+    # host that fixed cost was 0.25-0.6 s per task, nearly all of it
+    # CPython 3.11 re-reading pyspark.zip's directory at each task start
+    # (see shipping), which the engine's import now skips.
     n_parts = min(len(files), max(1, cores * slices_per_core))
-    # parallelize with explicit slices (no shuffle stage; see
-    # sources.parquet_direct) — whole files per task either way.
-    # Deliberately NOT amortized like the encode descriptors: decode tasks
-    # stream the whole reconstructed table back through Arrow (seconds of
-    # IO-coupled work each), so straggler smoothing beats the ~15 ms/task
-    # dispatch cost — A/B in the bench's fresh-write context measured
-    # 128 tasks consistently faster than 32 (6.7 vs 10.5, 5.3 vs 6.7,
-    # 4.8 vs 5.3 s across three interleaved trials)
-    files_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(f,) for f in files], n_parts),
-        "file string")
 
-    def task(batches):
+    def task(task_files):
         import re
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            for f in batch.column("file").to_pylist():
-                pf = pq.ParquetFile(f)
-                names = pf.schema_arrow.names
-                wanted = ("part_id", "col", "blob", "checksum") \
-                    if verify_checksums else ("part_id", "col", "blob")
-                want = [c for c in wanted if c in names]
-                # one task = one core (see sources.parquet_direct)
-                tbl = pf.read(columns=want, use_threads=False)
-                if "part_id" not in want:
-                    # hive-partitioned layout: part_id lives in the dir name
-                    m = re.search(r"part_id=(-?\d+)", f)
-                    if m is None:
-                        raise ValueError(f"no part_id column or dir in {f}")
-                    pid = np.full(len(tbl), int(m.group(1)), dtype=np.int64)
-                    tbl = tbl.append_column("part_id",
-                                            pa.array(pid, type=pa.int64()))
-                yield from _decode_table(tbl, verify_checksums)
+        for f in task_files:
+            pf = pq.ParquetFile(f)
+            names = pf.schema_arrow.names
+            wanted = ("part_id", "col", "blob", "checksum") \
+                if verify_checksums else ("part_id", "col", "blob")
+            want = [c for c in wanted if c in names]
+            # one task = one core (see sources.parquet_direct)
+            tbl = pf.read(columns=want, use_threads=False)
+            if "part_id" not in want:
+                # hive-partitioned layout: part_id lives in the dir name
+                m = re.search(r"part_id=(-?\d+)", f)
+                if m is None:
+                    raise ValueError(f"no part_id column or dir in {f}")
+                pid = np.full(len(tbl), int(m.group(1)), dtype=np.int64)
+                tbl = tbl.append_column("part_id",
+                                        pa.array(pid, type=pa.int64()))
+            yield from _decode_table(tbl, verify_checksums)
 
-    return files_df.mapInArrow(task, schema=DECODED_SCHEMA)
+    return map_descriptors(spark, files, n_parts, task, DECODED_SCHEMA)
 
 
 _SPARK_TYPES = {"int32": "int", "int64": "bigint", "float": "float",

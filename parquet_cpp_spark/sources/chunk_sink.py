@@ -38,7 +38,7 @@ def encode_parquet_direct_sink(spark, path: str, out_dir: str,
 
     Returns the manifest DataFrame (MANIFEST_SCHEMA — no blob column ever
     crosses the JVM)."""
-    from ..shipping import ensure_shipped
+    from ..shipping import ensure_shipped, map_descriptors
     ensure_shipped(spark)
 
     from ..operators.encode_arrow import make_arrow_encode_fn
@@ -48,47 +48,41 @@ def encode_parquet_direct_sink(spark, path: str, out_dir: str,
     splits = list_row_groups(path)
     cores = spark.sparkContext.defaultParallelism
     n_parts = min(len(splits), max(1, cores * slices_per_core))
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "file string, rg int")
 
     encode_fn = make_arrow_encode_fn(columns, codec_overrides,
                                      dict_size_limit, props)
 
-    def task(batches):
+    def task(task_splits):
         import hashlib
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            files = batch.column("file").to_pylist()
-            rgs = batch.column("rg").to_pylist()
-            for f, rg in zip(files, rgs):
-                # the filename carries BOTH the content-derived part_id and
-                # a source tag (file, rg): retries of the same split still
-                # overwrite with identical bytes (idempotent), but two
-                # DISTINCT row groups that happen to share a part_id
-                # (duplicate first doc_id + equal row count) can no longer
-                # silently shadow each other's chunk file
-                src_tag = hashlib.sha256(
-                    f"{f}#{rg}".encode()).hexdigest()[:12]
-                tbl = pq.ParquetFile(f).read_row_group(rg,
-                                                       use_threads=False)
-                for chunk_batch in encode_fn(tbl.to_batches()):
-                    pid = chunk_batch.column("part_id")[0].as_py()
-                    dest = os.path.join(
-                        out_dir, f"part-{pid:020d}-{src_tag}.parquet")
-                    tmp = dest + ".inprogress"
-                    pq.write_table(pa.Table.from_batches([chunk_batch]),
-                                   tmp, compression="zstd")
-                    os.replace(tmp, dest)  # atomic; retries overwrite
-                    names = [f.split(" ", 1)[0]
-                             for f in MANIFEST_SCHEMA.split(", ")[:-1]]
-                    arrays = [chunk_batch.column(n) for n in names]
-                    arrays.append(pa.array([dest] * chunk_batch.num_rows,
-                                           type=pa.string()))
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, names=names + ["file"])
+        for f, rg in task_splits:
+            # the filename carries BOTH the content-derived part_id and
+            # a source tag (file, rg): retries of the same split still
+            # overwrite with identical bytes (idempotent), but two
+            # DISTINCT row groups that happen to share a part_id
+            # (duplicate first doc_id + equal row count) can no longer
+            # silently shadow each other's chunk file
+            src_tag = hashlib.sha256(
+                f"{f}#{rg}".encode()).hexdigest()[:12]
+            tbl = pq.ParquetFile(f).read_row_group(rg,
+                                                   use_threads=False)
+            for chunk_batch in encode_fn(tbl.to_batches()):
+                pid = chunk_batch.column("part_id")[0].as_py()
+                dest = os.path.join(
+                    out_dir, f"part-{pid:020d}-{src_tag}.parquet")
+                tmp = dest + ".inprogress"
+                pq.write_table(pa.Table.from_batches([chunk_batch]),
+                               tmp, compression="zstd")
+                os.replace(tmp, dest)  # atomic; retries overwrite
+                names = [f.split(" ", 1)[0]
+                         for f in MANIFEST_SCHEMA.split(", ")[:-1]]
+                arrays = [chunk_batch.column(n) for n in names]
+                arrays.append(pa.array([dest] * chunk_batch.num_rows,
+                                       type=pa.string()))
+                yield pa.RecordBatch.from_arrays(
+                    arrays, names=names + ["file"])
 
-    return splits_df.mapInArrow(task, schema=MANIFEST_SCHEMA)
+    return map_descriptors(spark, splits, n_parts, task, MANIFEST_SCHEMA)

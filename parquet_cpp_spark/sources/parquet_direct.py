@@ -5,9 +5,10 @@ Rationale: the default scan path decodes parquet in the JVM, serializes the
 decoded rows over Arrow IPC to the Python worker, which re-materializes them
 — on a memory-bandwidth-bound host that doubles the traffic of the entire
 job for no benefit, because the encode kernels live in Python anyway. Here
-the JVM only shuffles tiny (path, row_group) descriptor rows; the token
-payload is read once, in the worker, straight from the (page-cached) parquet
-file. This is the same division of labor as the reference's
+the JVM only hands each task a range of indices into the (path, row_group)
+descriptors (``shipping.map_descriptors``); the token payload is read once,
+in the worker, straight from the (page-cached) parquet file. This is the
+same division of labor as the reference's
 column-chunk-granular reads (``/root/reference/src/parquet/file_reader.cc:63-135``)
 and is exactly how a custom DataSource scan partitions work.
 
@@ -40,14 +41,17 @@ def list_row_groups(path: str) -> list[tuple[str, int]]:
     return out
 
 
-# Python tasks are not free: each mapInArrow task costs ~8-15 ms of
-# JVM<->worker round-trip on this host (measured: a 128-task descriptor
-# no-op runs 1.9-2.6 s at local[32] while the identical JVM-only job runs
-# 0.19 s), and task launch is largely serialized. Slices therefore AMORTIZE:
-# a slice should carry at least this many input units before extra slices
-# (beyond one per core) pay for themselves. Scale-adaptive, not a local[32]
-# constant: with many units per core (a real cluster's file counts) the cap
-# `slices_per_core` wins and keeps fine-grained balance/straggler recovery.
+# Python tasks are not free. On the 4-core host each mapInArrow task paid
+# 0.25-0.6 s before its work, nearly all of it CPython 3.11 re-reading
+# pyspark.zip's directory at each task start (a no-op job over 4/16/32
+# tasks: 0.33/1.18/2.23 s, against 0.10/0.12/0.17 s in the JVM alone).
+# The engine's import now skips unchanged zips (see shipping), and the
+# remaining cost per task is still a Python worker round-trip. Slices
+# therefore AMORTIZE: a slice should carry at least this many input units
+# before extra slices (beyond one per core) pay for themselves.
+# Scale-adaptive, not a per-host constant: with many units per core (a
+# real cluster's file counts) the cap `slices_per_core` wins and keeps
+# fine-grained balance/straggler recovery.
 MIN_UNITS_PER_SLICE = 8
 
 
@@ -71,32 +75,26 @@ def encode_parquet_direct(spark, path: str,
     """Encode a parquet token table without moving row data through the JVM.
 
     Returns the chunk DataFrame (same schema as operators.encode)."""
-    from ..shipping import ensure_shipped
+    from ..shipping import ensure_shipped, map_descriptors
     ensure_shipped(spark)
 
     from ..operators.encode_arrow import make_arrow_encode_fn
 
     splits = list_row_groups(path)
     cores = spark.sparkContext.defaultParallelism
+    # explicit slice count instead of repartition: no shuffle stage (one
+    # less stage barrier per job), and contiguous row groups stay on one
+    # task — better page-cache locality. Chunk contents are identical
+    # either way (one chunk set per row group).
     n_parts = plan_slices(len(splits), cores, slices_per_core)
-    # parallelize with explicit slice count instead of repartition: no
-    # shuffle stage (one less stage barrier per job), and contiguous row
-    # groups stay on one task — better page-cache locality. Chunk contents
-    # are identical either way (one chunk set per row group).
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "file string, rg int")
 
     encode_fn = make_arrow_encode_fn(columns, codec_overrides,
                                      dict_size_limit, props)
 
-    def task(batches):
+    def task(task_splits):
         import pyarrow.parquet as pq
 
-        descs: list[tuple[str, int]] = []
-        for batch in batches:
-            descs.extend(zip(batch.column("file").to_pylist(),
-                             batch.column("rg").to_pylist()))
+        descs: list[tuple[str, int]] = list(task_splits)
         i = 0
         while i < len(descs):
             # one ParquetFile + one iter_batches stream per run of row
@@ -134,6 +132,6 @@ def encode_parquet_direct(spark, path: str,
                         f"{len(b)} rows, expected {want}")
                 yield from encode_fn([b])
 
-    out = splits_df.mapInArrow(task, schema=CHUNK_SCHEMA)
+    out = map_descriptors(spark, splits, n_parts, task, CHUNK_SCHEMA)
     out._pcs_colocated = True  # one part's whole chunk set per task
     return out

@@ -907,7 +907,7 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
     a re-hash of the bytes on disk, no re-encode. Names are source-tagged
     per (file, row_group), so resume trusts that the SOURCE split is
     unchanged; truncated or foreign files re-encode."""
-    from ..shipping import ensure_shipped
+    from ..shipping import ensure_shipped, map_descriptors
     from .parquet_direct import list_row_groups
     ensure_shipped(spark)
 
@@ -915,47 +915,42 @@ def write_parquet_dataset(spark, src_path: str, out_dir: str,
     splits = list_row_groups(src_path)
     cores = spark.sparkContext.defaultParallelism
     n_parts = max(1, min(len(splits), cores * slices_per_core))
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "file string, rg int")
     delta_cols = frozenset(delta_columns)
     bloom_cols = frozenset(bloom_filter_columns)
 
-    def task(batches):
+    def task(task_splits):
         import hashlib
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for batch in batches:
-            for f, rg in zip(batch.column("file").to_pylist(),
-                             batch.column("rg").to_pylist()):
-                # name carries the SOURCE tag (file, rg): a retried split
-                # overwrites its own file, two distinct splits never share
-                tag = hashlib.sha256(f"{f}#{rg}".encode()).hexdigest()[:16]
-                dest = os.path.join(out_dir, f"part-{tag}.parquet")
-                if resume:
-                    # BEFORE reading the source: a resumed split costs one
-                    # footer parse + hash, zero source I/O, zero encode;
-                    # a file written under different writer knobs fails
-                    # the pcs.params check and re-encodes
-                    row = _manifest_from_existing(
-                        dest, _params_tag(row_group_rows, page_rows,
-                                          compression, delta_cols,
-                                          encodings, data_page_version,
-                                          bloom_cols))
-                    if row is not None:
-                        yield _manifest_batch(row)
-                        continue
-                tbl = pq.ParquetFile(f).read_row_group(rg, use_threads=False)
-                row = _write_one_file(
-                    tbl,
-                    os.path.join(
-                        out_dir,
-                        f".part-{tag}-{_attempt_tag()}.inprogress"),
-                    dest,
-                    row_group_rows, page_rows, compression, delta_cols,
-                    encodings, data_page_version, bloom_cols)
-                yield _manifest_batch(row)
+        for f, rg in task_splits:
+            # name carries the SOURCE tag (file, rg): a retried split
+            # overwrites its own file, two distinct splits never share
+            tag = hashlib.sha256(f"{f}#{rg}".encode()).hexdigest()[:16]
+            dest = os.path.join(out_dir, f"part-{tag}.parquet")
+            if resume:
+                # BEFORE reading the source: a resumed split costs one
+                # footer parse + hash, zero source I/O, zero encode;
+                # a file written under different writer knobs fails
+                # the pcs.params check and re-encodes
+                row = _manifest_from_existing(
+                    dest, _params_tag(row_group_rows, page_rows,
+                                      compression, delta_cols,
+                                      encodings, data_page_version,
+                                      bloom_cols))
+                if row is not None:
+                    yield _manifest_batch(row)
+                    continue
+            tbl = pq.ParquetFile(f).read_row_group(rg, use_threads=False)
+            row = _write_one_file(
+                tbl,
+                os.path.join(
+                    out_dir,
+                    f".part-{tag}-{_attempt_tag()}.inprogress"),
+                dest,
+                row_group_rows, page_rows, compression, delta_cols,
+                encodings, data_page_version, bloom_cols)
+            yield _manifest_batch(row)
 
-    return splits_df.mapInArrow(task, schema=MANIFEST_SCHEMA)
+    return map_descriptors(spark, splits, n_parts, task, MANIFEST_SCHEMA)

@@ -1063,8 +1063,9 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
 
     Scale shape: the split unit is the ROW GROUP, like the JVM reader —
     the driver plans splits from footer-only metadata (``footer_meta``,
-    no data I/O), ships (path, rg) pairs via ``parallelize`` with an
-    explicit slice count (no shuffle stage), and each task mmaps its
+    no data I/O), ships (path, rg) pairs via ``shipping.map_descriptors``
+    (a range source plus one broadcast) with an explicit slice count (no
+    shuffle stage), and each task mmaps its
     file and faults in only its own chunks' byte ranges. Only split
     tuples cross the JVM going out; Arrow record batches come back
     through the mapInArrow channel. ``columns`` prunes untouched column
@@ -1127,7 +1128,7 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
     import glob as _glob
     import os as _os
 
-    from ..shipping import ensure_shipped
+    from ..shipping import ensure_shipped, map_descriptors
     ensure_shipped(spark)
 
     use_snapshot = (
@@ -1367,19 +1368,11 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
 
     splits = []
     kept_files: set = set()
-    # the miss/ren split fields are ','/':'-delimited: a column name
-    # containing the delimiters would corrupt them — fail at plan time
-    bad = [c for c in set(need) | set(rename_map) | set(rename_map.values())
-           if "," in c or ":" in c]
-    if bad:
-        raise ValueError(f"column names {bad!r} contain ',' or ':' — "
-                         "unsupported in evolved/renamed scans")
     for f, n_rg, _kept0, _leaves, _rp in plans:
         n_rg, kept = file_kept[f]
-        miss = ",".join(c for c in need if c not in file_cols[f])
-        ren = ",".join(f"{k}:{v}" for k, v in file_ren[f])
+        missing = tuple(c for c in need if c not in file_cols[f])
         for rg in kept:
-            splits.append((f, rg, n_rg, miss, ren))
+            splits.append((f, rg, n_rg, missing, file_ren[f]))
             kept_files.add(f)
     rg_kept = len(splits)
     if plan_out is not None:
@@ -1418,78 +1411,66 @@ def read_parquet_dataset(spark, src: str, columns=None, predicate=None,
         return _post(spark.createDataFrame([], sschema))
     cores = spark.sparkContext.defaultParallelism
     n_parts = min(len(splits), max(1, cores * 2))
-    splits_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(splits, n_parts),
-        "path string, rg int, n_rg int, miss string, ren string")
 
-    def task(batches):
+    def task(task_splits):
         import pyarrow as pa
         import pyarrow.compute as pc
         meta_cache: dict = {}   # one footer parse per file per task
-        for batch in batches:
-            paths = batch.column("path").to_pylist()
-            rgs = batch.column("rg").to_pylist()
-            n_rgs = batch.column("n_rg").to_pylist()
-            misses = batch.column("miss").to_pylist()
-            rens = batch.column("ren").to_pylist()
-            for p, rg, n_rg, miss, ren in zip(paths, rgs, n_rgs, misses,
-                                              rens):
-                if eq_terms and _rg_prunes(p, rg, eq_terms, meta_cache):
-                    continue
-                missing = miss.split(",") if miss else []
-                fwd = dict(pair.split(":") for pair in ren.split(",")) \
-                    if ren else {}             # stored -> current
-                rev = {v: k for k, v in fwd.items()}
-                cols_here = read_cols if not missing else (
-                    None if read_cols is None
-                    else [c for c in read_cols if c not in missing])
-                if cols_here is not None and rev:
-                    # the file stores pre-rename names: assemble those
-                    cols_here = [rev.get(c, c) for c in cols_here]
-                # single-rg file: whole-file buffered read (one syscall,
-                # no per-page mmap faults); multi-rg: mmap + rg ranges
-                tbl = assemble_file(
-                    p, columns=cols_here,
-                    row_groups=[rg] if n_rg > 1 else None)
-                if fwd:
-                    # snapshot-declared renames: present current names
-                    tbl = tbl.rename_columns(
-                        [fwd.get(n, n) for n in tbl.column_names])
-                # add-column evolution: columns this file predates read
-                # back as nulls of the union type
-                for c in missing:
-                    tbl = tbl.append_column(
-                        pa.field(c, union_types[c], nullable=True),
-                        pa.nulls(tbl.num_rows, union_types[c]))
-                if conjuncts is not None:
-                    mask = None
-                    for c, o, v in conjuncts:
-                        parts = c.split(".")
-                        arr = tbl.column(parts[0])
-                        for fname in parts[1:]:
-                            # SQL semantics for free: a null ancestor
-                            # struct yields a null child, which the
-                            # null-rejecting comparisons then drop
-                            arr = pc.struct_field(arr, fname)
+        for p, rg, n_rg, missing, ren_pairs in task_splits:
+            if eq_terms and _rg_prunes(p, rg, eq_terms, meta_cache):
+                continue
+            fwd = dict(ren_pairs)               # stored -> current
+            rev = {v: k for k, v in fwd.items()}
+            cols_here = read_cols if not missing else (
+                None if read_cols is None
+                else [c for c in read_cols if c not in missing])
+            if cols_here is not None and rev:
+                # the file stores pre-rename names: assemble those
+                cols_here = [rev.get(c, c) for c in cols_here]
+            # single-rg file: whole-file buffered read (one syscall,
+            # no per-page mmap faults); multi-rg: mmap + rg ranges
+            tbl = assemble_file(
+                p, columns=cols_here,
+                row_groups=[rg] if n_rg > 1 else None)
+            if fwd:
+                # snapshot-declared renames: present current names
+                tbl = tbl.rename_columns(
+                    [fwd.get(n, n) for n in tbl.column_names])
+            # add-column evolution: columns this file predates read
+            # back as nulls of the union type
+            for c in missing:
+                tbl = tbl.append_column(
+                    pa.field(c, union_types[c], nullable=True),
+                    pa.nulls(tbl.num_rows, union_types[c]))
+            if conjuncts is not None:
+                mask = None
+                for c, o, v in conjuncts:
+                    parts = c.split(".")
+                    arr = tbl.column(parts[0])
+                    for fname in parts[1:]:
+                        # SQL semantics for free: a null ancestor
+                        # struct yields a null child, which the
+                        # null-rejecting comparisons then drop
+                        arr = pc.struct_field(arr, fname)
 
-                        def _key(x):
-                            return x.decode() if isinstance(x, bytes) \
-                                and pa.types.is_string(arr.type) else x
-                        if o == "is_null":
-                            m = pc.is_null(arr)
-                        elif o == "not_null":
-                            m = pc.is_valid(arr)
-                        elif o == "in":
-                            m = pc.is_in(arr, value_set=pa.array(
-                                [_key(x) for x in v], type=arr.type))
-                        else:
-                            m = {"==": pc.equal, "!=": pc.not_equal,
-                                 "<": pc.less, "<=": pc.less_equal,
-                                 ">": pc.greater,
-                                 ">=": pc.greater_equal}[o](arr, _key(v))
-                        mask = m if mask is None else pc.and_(mask, m)
-                    tbl = tbl.filter(mask)
-                tbl = tbl.select(final_cols)   # caller's column order
-                yield from tbl.to_batches()
+                    def _key(x):
+                        return x.decode() if isinstance(x, bytes) \
+                            and pa.types.is_string(arr.type) else x
+                    if o == "is_null":
+                        m = pc.is_null(arr)
+                    elif o == "not_null":
+                        m = pc.is_valid(arr)
+                    elif o == "in":
+                        m = pc.is_in(arr, value_set=pa.array(
+                            [_key(x) for x in v], type=arr.type))
+                    else:
+                        m = {"==": pc.equal, "!=": pc.not_equal,
+                             "<": pc.less, "<=": pc.less_equal,
+                             ">": pc.greater,
+                             ">=": pc.greater_equal}[o](arr, _key(v))
+                    mask = m if mask is None else pc.and_(mask, m)
+                tbl = tbl.filter(mask)
+            tbl = tbl.select(final_cols)   # caller's column order
+            yield from tbl.to_batches()
 
-    return _post(splits_df.mapInArrow(task, schema=sschema))
+    return _post(map_descriptors(spark, splits, n_parts, task, sschema))

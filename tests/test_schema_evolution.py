@@ -118,6 +118,27 @@ def test_incompatible_same_name_column_fails_loudly(spark, tmp_path):
         read_parquet_dataset(spark, out).count()
 
 
+def test_delimiter_characters_in_evolved_column_name(spark, tmp_path):
+    """Split descriptors reach the tasks as Python values, not delimited
+    strings, so a column name holding ',' or ':' null-fills like any
+    other."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_cpp_spark.sources.record_assembly import \
+        read_parquet_dataset
+
+    pq.write_table(pa.table({"doc_id": pa.array([1, 2], pa.int32())}),
+                   str(tmp_path / "v1.parquet"))
+    pq.write_table(pa.table({"doc_id": pa.array([3], pa.int32()),
+                             "a,b:c": ["x"]}),
+                   str(tmp_path / "v2.parquet"))
+    df = read_parquet_dataset(spark, str(tmp_path))
+    assert df.columns == ["doc_id", "a,b:c"]
+    assert sorted(tuple(r) for r in df.collect()) == \
+        [(1, None), (2, None), (3, "x")]
+
+
 def test_spark_jvm_reader_agrees(spark, evolved):
     """Spark's own mergeSchema read of the same directory produces the
     identical union content — the engine's evolution semantics match the
